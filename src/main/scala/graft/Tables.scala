@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Schema-first loaders for the driver-provided star schema
   * (`/root/testdata/sf*` — see TESTDATA.md). Parquet carries its own
-  * schema, so no inference pass is needed; loaders are thin and lazy.
+  * schema in its footer, which [[graft.sources.FooterSchemas.inferFresh]]
+  * reads on the driver, so a load runs no inference job; loaders are
+  * thin and lazy.
   *
   * At 100 TB these would be catalog tables (partitioned/bucketed); the
   * single-parquet layout is the test harness's. All queries take the
@@ -24,7 +26,7 @@ object Tables {
     // wall-clock values are identical to the nanos path). Dispatch on the
     // schema the reader actually produced so both layouts load the same.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = read(spark, s"$dir/$name.parquet")
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -37,6 +39,13 @@ object Tables {
       }
     } else df
   }
+
+  /** `spark.read.parquet(path)` under the schema read from the footers
+    * on the driver, or Spark's own inference where they cannot serve it.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
+    graft.sources.FooterSchemas.readAs(spark,
+      graft.sources.FooterSchemas.inferFresh(spark, path), Seq(path))
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -80,8 +80,7 @@ object AvroFiles {
       val writer = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](schema))
       val p = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.avro")
-      val out = p.getFileSystem(
-        new org.apache.hadoop.conf.Configuration()).create(p, true)
+      val out = p.getFileSystem(FooterSchemas.hadoopConf()).create(p, true)
       writer.create(schema, out)
       it.foreach { bytes =>
         val dec = org.apache.avro.io.DecoderFactory.get()

@@ -5,7 +5,6 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
@@ -169,8 +168,7 @@ object BloomSkip {
   private def mayContain(conf: Configuration, file: String,
       probes: Seq[(String, Seq[Any])]): Boolean =
     try {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
+      val reader = FooterSchemas.open(conf, new Path(file))
       try {
         import scala.jdk.CollectionConverters._
         val blocks = reader.getFooter.getBlocks.asScala.toSeq

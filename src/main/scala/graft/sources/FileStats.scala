@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, SparkSession}
@@ -90,8 +88,7 @@ object FileStats {
     */
   private def fileLines(conf: Configuration, file: String,
       seedSchemas: Option[SparkSession] = None): Seq[String] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
+    val reader = FooterSchemas.open(conf, new Path(file))
     try {
       import scala.jdk.CollectionConverters._
       // this loop already holds every fresh file's footer — seed the
@@ -278,12 +275,7 @@ object FileStats {
     // read. Schema comes from one footer; no data is read. Any failure
     // to recover a Filter condition falls back to keeping every file.
     val expr: Expression = try {
-      // driver-side footer schema: a schema-less spark.read pays an
-      // inference JOB just to translate the predicate
-      val probeScan = scala.util.Try(FooterSchemas.of(spark, files.head))
-        .map(s => spark.read.schema(s).parquet(files.head))
-        .getOrElse(spark.read.parquet(files.head))
-      val probe = probeScan.filter(predicate)
+      val probe = FooterSchemas.read(spark, files.take(1)).filter(predicate)
       val plan = probe.queryExecution.optimizedPlan
       plan.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition

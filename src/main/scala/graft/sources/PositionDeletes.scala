@@ -55,9 +55,7 @@ private[graft] object PositionDeletes {
   private[graft] def isDvSidecar(spark: SparkSession, path: String): Boolean = {
     val hit = kindMemo.get(path)
     if (hit != null) return hit.booleanValue()
-    // driver-side footer read — a schema-less spark.read pays a job
-    val isDv = scala.util.Try(FooterSchemas.of(spark, path).fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(path).schema.fieldNames.toSeq)
+    val isDv = FooterSchemas.schemaOf(spark, Seq(path)).fieldNames
       .contains(DeleteVectors.DvCol)
     if (kindMemo.size > 4096) kindMemo.clear()
     kindMemo.put(path, java.lang.Boolean.valueOf(isDv))

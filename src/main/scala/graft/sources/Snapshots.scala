@@ -331,10 +331,8 @@ object Snapshots {
             s.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
           // an ALTER-extended table's committed shape IS the declared
           // schema (old footers legitimately lack the added columns)
-          val committed = declaredSchema(spark, table)
-            .orElse(FooterSchemas.uniform(spark, base))
-            .getOrElse(
-              spark.read.option("mergeSchema", "true").parquet(base: _*).schema)
+          val committed = declaredSchema(spark, table).getOrElse(
+            FooterSchemas.schemaOf(spark, base, mergeSchema = true))
           if (sig(committed) != sig(want)) {
             f.delete(dataDir, true) // no orphaned layout-mismatched files
             throw new IllegalStateException(
@@ -1204,25 +1202,19 @@ object Snapshots {
     * without the inference JOB when every footer agrees: Spark 4 runs a
     * distributed footer pass per schema-less `spark.read.parquet`, and
     * the DML/feed machinery plans several such reads per operation —
-    * measured at ~0.15 s of pure job overhead each (DmlProfile). The
-    * driver-side footer memo ([[FooterSchemas]]) serves the schema
-    * instead; files that DISAGREE (a mid-history schema evolution) fall
-    * back to Spark's own inference, preserving its merge/first-file
-    * semantics exactly. Inference-boundary rule: field ids only ever
-    * enter a read schema from the DECLARED override, so the resolved
-    * schema is stripped either way — see [[FieldIds.strip]].
+    * about 55 ms each, warm, at sf0.01 on a 4-core box (driver time
+    * plus the job). The driver-side footer memo ([[FooterSchemas]])
+    * serves the schema instead; files that DISAGREE (a mid-history
+    * schema evolution) fall back to Spark's own inference, preserving
+    * its merge/first-file semantics exactly. Inference-boundary rule:
+    * field ids only ever enter a read schema from the DECLARED
+    * override, so the resolved schema is stripped either way — see
+    * [[FieldIds.strip]].
     */
   private def readInferred(spark: SparkSession, files: Seq[String],
       mergeSchema: Boolean = false): DataFrame =
-    FooterSchemas.uniform(spark, files) match {
-      case Some(s) => spark.read.schema(FieldIds.strip(s)).parquet(files: _*)
-      case None =>
-        val raw = spark.read
-          .option("mergeSchema", mergeSchema.toString).parquet(files: _*)
-        if (!FieldIds.hasIds(raw.schema)) raw
-        else spark.read.option("mergeSchema", mergeSchema.toString)
-          .schema(FieldIds.strip(raw.schema)).parquet(files: _*)
-    }
+    spark.read.schema(FieldIds.strip(
+      FooterSchemas.schemaOf(spark, files, mergeSchema))).parquet(files: _*)
 
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
@@ -1281,9 +1273,7 @@ object Snapshots {
   private def eqSidecarKeys(spark: SparkSession, path: String): Seq[String] = {
     val hit = eqKeySetMemo.get(path)
     if (hit != null) return hit
-    // driver-side footer read — a schema-less spark.read pays a job
-    val ks = scala.util.Try(FooterSchemas.of(spark, path).fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(path).schema.fieldNames.toSeq).sorted
+    val ks = FooterSchemas.schemaOf(spark, Seq(path)).fieldNames.toSeq.sorted
     if (eqKeySetMemo.size > 4096) eqKeySetMemo.clear()
     eqKeySetMemo.put(path, ks)
     ks

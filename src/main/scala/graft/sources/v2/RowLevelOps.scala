@@ -2,8 +2,7 @@ package graft.sources.v2
 
 import java.util.UUID
 
-import graft.sources.{FileStats, Snapshots}
-import org.apache.hadoop.conf.Configuration
+import graft.sources.{FileStats, FooterSchemas, Snapshots}
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -380,11 +379,8 @@ private[v2] final class SnapshotReplaceBatchWrite(
   private def removedRowCount(spark: SparkSession, files: Seq[String]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     files.iterator.map { f =>
-      try {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
-        try r.getRecordCount finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => 1L }
+      try FooterSchemas.rowCount(conf, f)
+      catch { case scala.util.control.NonFatal(_) => 1L }
     }.sum
   }
 }
@@ -448,7 +444,7 @@ private[v2] final class SnapshotParquetWriter(dir: String, schemaJson: String,
   private var shaped = false
 
   private def ensure(): Unit = if (writer == null) {
-    val hconf = new Configuration()
+    val hconf = FooterSchemas.hadoopConf()
     conf.foreach { case (k, v) => hconf.set(k, v) }
     ParquetWriteSupport.setSchema(schema, hconf)
     path = f"$dir/part-$partitionId%05d-$taskId-${UUID.randomUUID}.snappy.parquet"
@@ -490,7 +486,7 @@ private[v2] final class SnapshotParquetWriter(dir: String, schemaJson: String,
     if (writer != null) { writer.close(); writer = null }
     if (path != null) {
       val p = new Path(path)
-      p.getFileSystem(new Configuration()).delete(p, false)
+      p.getFileSystem(FooterSchemas.hadoopConf()).delete(p, false)
       ()
     }
   }

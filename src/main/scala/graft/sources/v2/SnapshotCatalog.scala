@@ -369,16 +369,18 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
                   def info(p: String): (Long, Long) =
                     try {
                       val st = fsys.getFileStatus(new Path(p))
-                      // a v1 sidecar's row count IS its position count;
-                      // a v2 deletion vector reports the recorded
-                      // cardinality sum (one row per touched file)
+                      // a v1 sidecar's row count IS its position count
+                      // (footer, on the driver); a v2 deletion vector
+                      // reports the recorded cardinality sum (one row
+                      // per touched file)
                       val n =
                         if (graft.sources.PositionDeletes.isDvSidecar(sp, p))
-                          sp.read.parquet(p)
+                          graft.sources.FooterSchemas.read(sp, Seq(p))
                             .agg(org.apache.spark.sql.functions.sum(
                               graft.sources.DeleteVectors.CardCol))
                             .head.getLong(0)
-                        else sp.read.parquet(p).count()
+                        else graft.sources.FooterSchemas.rowCount(
+                          sp.sparkContext.hadoopConfiguration, p)
                       (n, st.getLen)
                     } catch {
                       case scala.util.control.NonFatal(_) => (-1L, -1L)

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import java.util
 
-import graft.sources.Snapshots
+import graft.sources.{FieldIds, FooterSchemas, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -228,18 +228,21 @@ class SnapshotProvider extends org.apache.spark.sql.connector.catalog.TableProvi
     require(files.nonEmpty, s"snapshot v$version of $path lists no data files")
     // ALTER-extended tables read under their declared superset schema
     // (absent columns = typed NULLs; parquet resolves by name)
-    val declared = Snapshots.declaredSchema(spark, path)
-    val t0 = ParquetTable(s"graft-snapshot:$path@v$version",
-      spark, options, files, declared, classOf[ParquetFileFormat])
+    def table(schema: Option[StructType]) =
+      ParquetTable(s"graft-snapshot:$path@v$version",
+        spark, options, files, schema, classOf[ParquetFileFormat])
     // footer inference copies field ids into the schema; ids only enter
-    // a read schema from the DECLARED override (FieldIds.strip scaladoc)
-    val t =
-      if (declared.isDefined ||
-          !graft.sources.FieldIds.hasIds(t0.schema)) t0
-      else ParquetTable(s"graft-snapshot:$path@v$version",
-        spark, options, files,
-        Some(graft.sources.FieldIds.strip(t0.schema)),
-        classOf[ParquetFileFormat])
+    // a read schema from the DECLARED override (FieldIds.strip scaladoc).
+    // Files that agree get their schema from the driver's footer memo;
+    // only disagreeing ones pay ParquetTable's inference job.
+    val t = Snapshots.declaredSchema(spark, path).orElse(
+        FooterSchemas.uniform(spark, files).map(FieldIds.strip)) match {
+      case known @ Some(_) => table(known)
+      case None =>
+        val t0 = table(None)
+        if (FieldIds.hasIds(t0.schema)) table(Some(FieldIds.strip(t0.schema)))
+        else t0
+    }
     val r = ResolvedSnapshot(path, version, files, t,
       Snapshots.deleteFiles(spark, path, Some(version)),
       Snapshots.eqDeleteFiles(spark, path, Some(version)))

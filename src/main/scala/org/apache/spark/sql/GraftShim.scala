@@ -85,6 +85,12 @@ object GraftShim {
         spark.asInstanceOf[classic.SparkSession].sessionState.conf)
       .convert(msg)
 
+  /** `s` with every field, element and value nullable, at any depth —
+    * what a file-source relation applies to any data schema it is given.
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** A streaming-tagged frame over an InternalRow RDD (for a source's
     * empty micro-batch, where there is no file relation to re-tag).
     */
